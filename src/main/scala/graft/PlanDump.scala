@@ -8,6 +8,9 @@ import org.apache.spark.sql.SparkSession
   * optimization rounds commit as evidence.
   *
   *   sbt -batch "runMain graft.PlanDump <outDir> <suffix> [queries] [sfDir]"
+  *
+  * Exits 1 when any query fails to dump or a requested name is not a
+  * query, so a partial plan set never passes for a complete one.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,7 +29,9 @@ object PlanDump {
     new java.io.File(outDir).mkdirs()
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    names.foreach { name =>
+    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    unknown.toSeq.sorted.foreach(n => println(s"[plandump] $n FAILED: no such query"))
+    val failed = unknown.size + names.count { name =>
       try {
         val df = SparkEntry.queries(name)(spark, dir)
         val plan = df.queryExecution.explainString(
@@ -34,11 +39,16 @@ object PlanDump {
         val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
         java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
         println(s"[plandump] $name -> $p (${plan.length} chars)")
+        false
       } catch {
-        case e: Throwable => println(s"[plandump] $name FAILED: $e")
+        case e: Throwable => println(s"[plandump] $name FAILED: $e"); true
       }
     }
     SparkEntry.clearCaches()
     spark.stop()
+    if (failed > 0) {
+      System.err.println(s"[plandump] $failed of ${names.size + unknown.size} queries failed to dump")
+      sys.exit(1)
+    }
   }
 }

@@ -147,7 +147,10 @@ object DepGraph {
     false
   }
 
-  def coarsePos(word: String): String = {
+  /** Memoized per thread ([[WordMemo]]). */
+  def coarsePos(word: String): String = WordMemo.coarsePos(word)
+
+  private[nlp] def computeCoarsePos(word: String): String = {
     val w = word.toLowerCase
     if (w.isEmpty) "X"
     else if (w.forall(_.isDigit)) "NUM"

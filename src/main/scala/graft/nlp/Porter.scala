@@ -9,7 +9,10 @@ package graft.nlp
   */
 object Porter {
 
-  def stem(input: String): String = {
+  /** Memoized per thread ([[WordMemo]]). */
+  def stem(input: String): String = WordMemo.stem(input)
+
+  private[nlp] def computeStem(input: String): String = {
     val w = input.toLowerCase
     if (w.length <= 2) return w
     var b = w.toCharArray

@@ -184,12 +184,13 @@ object TextOps {
 
   /** masked_text semantics (`features/util.py:9-22`): a token inside an
     * entity becomes the entity class id; a numeric token becomes "NUM";
-    * otherwise the (lowercased) word.
+    * otherwise the (lowercased) word, memoized per thread ([[WordMemo]]).
     */
   def maskedWord(word: String, entityClass: Option[String]): String =
-    entityClass.getOrElse(
-      if (numberRe.matcher(word).matches()) "NUM" else word.toLowerCase
-    )
+    entityClass.getOrElse(WordMemo.masked(word))
+
+  private[nlp] def computeMasked(word: String): String =
+    if (numberRe.matcher(word).matches()) "NUM" else word.toLowerCase
 
   private val digitsRe = java.util.regex.Pattern.compile("[0-9]+")
 

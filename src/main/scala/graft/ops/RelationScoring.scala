@@ -45,6 +45,13 @@ import org.apache.spark.sql.functions._
   *    (`relations/sentence.py:6-113`). Deviation: the reference adds the
   *    stemmed BOW only in training mode (dead weights at predict); we
   *    enumerate identically in both paths so train/predict indices agree.
+  *
+  * Per candidate pair, scoring costs the features it hashes: names
+  * stream out of [[enumerate]] as parts into a [[FeatureSink]] that
+  * hashes them in flight ([[scoreEdge]]) or builds them for training
+  * ([[features]]), and per-word stems, POS tags and masks come from the
+  * per-thread [[graft.nlp.WordMemo]] rather than being recomputed for
+  * every sentence context a word appears in.
   */
 object RelationScoring {
 
@@ -57,17 +64,73 @@ object RelationScoring {
     * words, which fold consistently on both the train and predict path —
     * consistency, not a specific value, is the hashing-trick contract).
     * Char-wise avoids the String.getBytes array allocation per feature
-    * name, the single largest allocation source in the scoring hot path.
+    * name.
     */
-  private[graft] def h(s: CharSequence): Int = {
-    var hh = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) {
-      hh ^= (s.charAt(i) & 0xffL)
-      hh *= 0x100000001b3L
+  private[graft] def h(s: CharSequence): Int = index(fnv(FnvOffset, s, 0, s.length))
+
+  private final val FnvOffset = 0xcbf29ce484222325L
+  private final val FnvPrime = 0x100000001b3L
+  /** Continues FNV-1a state `hh` over `s[from, until)`. */
+  private def fnv(hh: Long, s: CharSequence, from: Int, until: Int): Long = {
+    var x = hh
+    var i = from
+    while (i < until) {
+      x = (x ^ (s.charAt(i) & 0xffL)) * FnvPrime
       i += 1
     }
-    ((hh % Dims) + Dims).toInt % Dims
+    x
+  }
+  private def index(hh: Long): Int = ((hh % Dims) + Dims).toInt % Dims
+
+  /** Receiver of [[enumerate]]'s features. A feature name arrives as a
+    * sequence of parts closed by `end` with the feature's value; the name
+    * is the concatenation of the parts, so a name never has to exist as a
+    * String for the scoring path to hash it.
+    */
+  private abstract class FeatureSink {
+    def part(s: String): Unit
+    def part(s: String, from: Int, until: Int): Unit
+    def part(c: Char): Unit
+    def end(v: Double): Unit
+    /** `n` in decimal, as `Int.toString` renders it. */
+    final def digits(n: Int): Unit =
+      if (n < 0) part(Integer.toString(n))
+      else {
+        if (n >= 10) digits(n / 10)
+        part(('0' + n % 10).toChar)
+      }
+  }
+
+  /** Scoring sink: folds FNV-1a over the parts as they arrive and adds
+    * `w(h(name)) * value` at each `end` — the same index and the same
+    * summation order as hashing the finished name.
+    */
+  private final class ScoreSink(w: Array[Double], b: Double) extends FeatureSink {
+    private var hh = FnvOffset
+    var sum: Double = b
+    def part(s: String): Unit = part(s, 0, s.length)
+    def part(s: String, from: Int, until: Int): Unit = hh = fnv(hh, s, from, until)
+    def part(c: Char): Unit = hh = (hh ^ (c & 0xffL)) * FnvPrime
+    def end(v: Double): Unit = {
+      sum += w(index(hh)) * v
+      hh = FnvOffset
+    }
+  }
+
+  /** Training sink: appends the parts to a builder and sums each finished
+    * name's values into a map.
+    */
+  private final class MapSink extends FeatureSink {
+    private val nb = new java.lang.StringBuilder(96)
+    val out = scala.collection.mutable.HashMap.empty[String, Double]
+    def part(s: String): Unit = nb.append(s)
+    def part(s: String, from: Int, until: Int): Unit = nb.append(s, from, until)
+    def part(c: Char): Unit = nb.append(c)
+    def end(v: Double): Unit = {
+      val f = nb.toString
+      nb.setLength(0)
+      out.update(f, out.getOrElse(f, 0.0) + v)
+    }
   }
 
   /** Per-edge context beyond the sentence: mentions of the edge's
@@ -106,28 +169,23 @@ object RelationScoring {
   def features(prep: SentencePrep, m1: Mention, m2: Mention,
       sameSentence: Boolean, sentDist: Int,
       ctx: EdgeCtx): Map[String, Double] = {
-    val out = scala.collection.mutable.HashMap.empty[String, Double]
-    enumerate(prep, m1, m2, sameSentence, sentDist, ctx) { (cs, v) =>
-      val f = cs.toString
-      out.update(f, out.getOrElse(f, 0.0) + v)
-    }
-    out.toMap
+    val sink = new MapSink
+    enumerate(prep, m1, m2, sameSentence, sentDist, ctx, sink)
+    sink.out.toMap
   }
 
   /** Zero-materialization scoring: identical feature enumeration, each
-    * (name, value) folded straight into w·x — no map, no vector, no
-    * sort. This is the inference hot path (GC-bound at 32 threads
-    * otherwise).
+    * name hashed from its parts as they stream out and folded straight
+    * into w·x — no name string, no map, no vector, no sort. This is the
+    * inference hot path.
     */
   def scoreEdge(model: LinearModel, prep: SentencePrep,
       m1: Mention, m2: Mention,
       sameSentence: Boolean, sentDist: Int,
       ctx: EdgeCtx = EdgeCtx.empty): Double = {
-    var s = model.b
-    enumerate(prep, m1, m2, sameSentence, sentDist, ctx) { (f, v) =>
-      s += model.w(h(f)) * v
-    }
-    s
+    val sink = new ScoreSink(model.w, model.b)
+    enumerate(prep, m1, m2, sameSentence, sentDist, ctx, sink)
+    sink.sum
   }
 
   /** Per-sentence memoized tables shared across all candidate pairs of
@@ -146,7 +204,9 @@ object RelationScoring {
                            sentPos: IndexedSeq[String] = null) {
     // per-index caches (not eager arrays): a pair typically touches only
     // its path/between tokens, so cross-context preps stay cheap while
-    // dense same-sentence preps still amortize fully
+    // dense same-sentence preps still amortize fully; a miss is answered
+    // by the per-thread WordMemo, so a word is stemmed/tagged/masked once
+    // per task thread however many preps it appears in
     private val posCache = new Array[String](toks.length)
     def pos(i: Int): String = {
       if (posCache(i) == null) posCache(i) = DepGraph.coarsePos(toks(i).word)
@@ -178,8 +238,7 @@ object RelationScoring {
     lazy val negated: Boolean = DepGraph.isNegatedLabeled(depLabels)
     lazy val mainVerbStems: List[String] = {
       val rootIdx = depth.indices.find(depth(_) == 0).getOrElse(0)
-      DepGraph.mainVerbs(toks, adj, rootIdx)
-        .map(v => Porter.stem(toks(v).word.toLowerCase)).toList
+      DepGraph.mainVerbs(toks, adj, rootIdx).map(stem).toList
     }
     private val headCache = scala.collection.mutable.HashMap.empty[(Int, Int), Int]
     def head(begin: Int, end: Int): Int =
@@ -288,27 +347,26 @@ object RelationScoring {
     "now")
 
   /** Single source of truth for the edge feature set; both the training
-    * (Map) and inference (fold) paths stream through here, so hashed
-    * indices agree by construction.
+    * (Map) and inference (fold) paths stream through here into their
+    * [[FeatureSink]], so hashed indices agree by construction. Names are
+    * emitted as parts (`add`/`add2`/`add3`, or `sink.part`… `sink.end`
+    * for n-grams and numbered names): the scoring sink hashes them without
+    * building the name. Per-word stems, POS tags and masks come from the
+    * prep's per-index caches over [[graft.nlp.WordMemo]].
     */
   private def enumerate(
       prep: SentencePrep,
       m1: Mention, m2: Mention,
       sameSentence: Boolean, sentDist: Int,
-      ctx: EdgeCtx)(add0: (CharSequence, Double) => Unit): Unit = {
+      ctx: EdgeCtx, sink: FeatureSink): Unit = {
 
     val toks = prep.toks
-    def add(f: String, v: Double = 1.0): Unit = add0(f, v)
-    // zero-materialization name assembly: the scoring path hashes the
-    // CharSequence directly, so multi-part names never become Strings —
-    // the single reusable builder removes the dominant allocation source
-    // of the 32-thread hot path (bandwidth-stall-bound on this box)
-    val nb = new java.lang.StringBuilder(96)
+    def add(f: String, v: Double = 1.0): Unit = { sink.part(f); sink.end(v) }
     def add2(a: String, b: String, v: Double = 1.0): Unit = {
-      nb.setLength(0); nb.append(a).append(b); add0(nb, v)
+      sink.part(a); sink.part(b); sink.end(v)
     }
     def add3(a: String, b: String, c: String): Unit = {
-      nb.setLength(0); nb.append(a).append(b).append(c); add0(nb, 1.0)
+      sink.part(a); sink.part(b); sink.part(c); sink.end(1.0)
     }
 
     val h1 = prep.head(m1.begin, m1.end)
@@ -351,20 +409,27 @@ object RelationScoring {
     val e1First = firstTok(m1); val e1Last = lastTok(m1)
     val e2First = firstTok(m2); val e2Last = lastTok(m2)
 
+    // sentence mentions per class, in class order (entity counts and
+    // NamedEntityCount both walk them)
+    val byClass: Seq[(String, Seq[Mention])] =
+      if (ctx.sentMentions.isEmpty) Nil
+      else ctx.sentMentions.groupBy(_.class_id).toSeq.sortBy(_._1)
+
     // ==== SentenceFeatureGenerator (`relations/new/sentence.py`) ========
-    add(s"order=${m1.class_id}_${m2.class_id}")
+    sink.part("order="); sink.part(m1.class_id); sink.part('_'); sink.part(m2.class_id)
+    sink.end(1.0)
     if (m1.class_id < m2.class_id) add("f_order")
-    add(if (sameSentence) "same_sent" else s"sent_dist=$sentDist")
+    if (sameSentence) add("same_sent")
+    else { sink.part("sent_dist="); sink.digits(sentDist); sink.end(1.0) }
 
     // entity counts in the edge's sentence(s) (`sentence.py:82-105`):
     // per class, individual = count - 1 (one is the edge's own entity)
     if (ctx.sentMentions.nonEmpty) {
-      val byClass = ctx.sentMentions.groupBy(_.class_id)
       var total = 0
-      byClass.toSeq.sortBy(_._1).foreach { case (cls, ms) =>
+      byClass.foreach { case (cls, ms) =>
         val ind = math.max(0, ms.size - 1)
         total += ind
-        add(s"f_counts_ind=$cls", ind.toDouble)
+        add2("f_counts_ind=", cls, ind.toDouble)
       }
       add("f_counts_total", total.toDouble)
       // entities strictly between the pair (char-span between the
@@ -375,7 +440,7 @@ object RelationScoring {
       var btotal = 0
       between.groupBy(_.class_id).toSeq.sortBy(_._1).foreach { case (cls, ms) =>
         btotal += ms.size
-        add(s"f_counts_bet=$cls", ms.size.toDouble)
+        add2("f_counts_bet=", cls, ms.size.toDouble)
       }
       add("f_counts_bet_total", btotal.toDouble)
     }
@@ -424,14 +489,15 @@ object RelationScoring {
       val w = toks(hi).word
       add3(prefix, "_stem=", prep.stem(hi))
       add3(prefix, "_pos=", prep.pos(hi))
-      if (w.nonEmpty && w.head.isUpper) add(s"${prefix}_cap")
-      if (w.exists(_.isDigit)) add(s"${prefix}_digits")
-      if (w.contains('-') || w.contains('/')) add(s"${prefix}_punct")
+      if (w.nonEmpty && w.head.isUpper) add2(prefix, "_cap")
+      if (w.exists(_.isDigit)) add2(prefix, "_digits")
+      if (w.contains('-') || w.contains('/')) add2(prefix, "_punct")
       var n = 2
       while (n <= 3) {
+        val gn = if (n == 2) "_2g=" else "_3g="
         var i = 0
         while (i + n <= w.length) {
-          add(s"${prefix}_${n}g=${w.substring(i, i + n)}")
+          sink.part(prefix); sink.part(gn); sink.part(w, i, i + n); sink.end(1.0)
           i += 1
         }
         n += 1
@@ -456,12 +522,13 @@ object RelationScoring {
           add3(prefix, "_masked=", masked(i))
           add3(prefix, "_stem_masked=", Porter.stem(masked(i)))
           add3(prefix, "_ann=", cls)
-          add3(prefix, "_ann=", entMarker)
+          sink.part(prefix); sink.part("_ann="); sink.part(entMarker); sink.part(cls)
+          sink.end(1.0)
           i += 1
         }
       }
-    entityTokenFeats("e1", e1First, e1Last, "entity1_" + m1.class_id, m1.class_id)
-    entityTokenFeats("e2", e2First, e2Last, "entity2_" + m2.class_id, m2.class_id)
+    entityTokenFeats("e1", e1First, e1Last, "entity1_", m1.class_id)
+    entityTokenFeats("e2", e2First, e2Last, "entity2_", m2.class_id)
 
     // ==== IntermediateTokens (`context.py:76-166`): tokens strictly
     // between the heads, directional (fwd when h1 < h2, bkd otherwise)
@@ -486,9 +553,9 @@ object RelationScoring {
 
     // ==== NamedEntityCount (`relations/sentence.py:6-30`): count of
     // same-class entities in the edge's sentence(s), count in the name ==
-    if (ctx.sentMentions.nonEmpty) {
-      ctx.sentMentions.groupBy(_.class_id).toSeq.sortBy(_._1)
-        .foreach { case (cls, ms) => add(s"ne_count_${cls}_${ms.size}") }
+    byClass.foreach { case (cls, ms) =>
+      sink.part("ne_count_"); sink.part(cls); sink.part('_'); sink.digits(ms.size)
+      sink.end(1.0)
     }
 
     // ==== BagOfWords / StemmedBagOfWords (`relations/sentence.py:33-113`)
@@ -519,6 +586,9 @@ object RelationScoring {
     // lemma and POS n-grams 1..4 with [SOURCE/[TARGET] sentinels, token
     // counts ±punct and path negation; PD adds undirected/directed edge
     // n-grams and full n-grams (`utils/graphs.py` Path string algebra).
+    // An n-gram name is `<name>_<kind>_<n>g=` then its elements joined by
+    // '~'; a directed edge element is `<label>-<F|B>`, a full element
+    // `<token> <label>-<F|B>` (the target node has no edge).
     def pathFeatures(name: String, path: IndexedSeq[Int], withEdges: Boolean): Unit = {
       if (path.length < 2) return
       val last = path.length - 1
@@ -533,100 +603,94 @@ object RelationScoring {
         posR(k) = if (k == 0) "[S" else if (k == last) "T]" else prep.pos(i)
         k += 1
       }
+      def gram(kind: String, n: Int): Unit = {
+        sink.part(name); sink.part(kind); sink.digits(n); sink.part("g=")
+      }
       // token-only n-grams: n=1 over middle, n>1 over all nodes
-      def tokenNGrams(kind: String, rendered: Array[String],
-                      renderMid: Int => String): Unit = {
-        val g1 = name + "_" + kind + "_1g="
+      def tokenNGrams(kind: String, rendered: Array[String]): Unit = {
         var k = 1
-        while (k < last) { add2(g1, renderMid(path(k))); k += 1 }
+        while (k < last) { gram(kind, 1); sink.part(rendered(k)); sink.end(1.0); k += 1 }
         var n = 2
         while (n <= 4) {
-          val gn = name + "_" + kind + "_" + n + "g="
           var s = 0
           while (s + n <= path.length) {
-            nb.setLength(0); nb.append(gn)
+            gram(kind, n)
             var j = 0
             while (j < n) {
-              if (j > 0) nb.append('~')
-              nb.append(rendered(s + j))
+              if (j > 0) sink.part('~')
+              sink.part(rendered(s + j))
               j += 1
             }
-            add0(nb, 1.0)
+            sink.end(1.0)
             s += 1
           }
           n += 1
         }
       }
-      tokenNGrams("bow", bowR, masked)
-      tokenNGrams("pos", posR, prep.pos)
+      tokenNGrams("_bow_", bowR)
+      tokenNGrams("_pos_", posR)
       // counts + negation over the middle tokens
       val middle = (1 until last).map(path(_))
-      add(name + "_tokens_count", middle.size.toDouble)
-      add(name + "_tokens_count_nopunct",
+      add2(name, "_tokens_count", middle.size.toDouble)
+      add2(name, "_tokens_count_nopunct",
         middle.count(i => prep.pos(i) != "PUNCT").toDouble)
       if (DepGraph.isNegated(middle.map(toks(_))))
-        add(name + "_is_negated")
+        add2(name, "_is_negated")
       if (withEdges) {
         // edge n-grams over source+middle steps (PathNode.edge_type)
-        val undR = new Array[String](last)
+        val lblR = new Array[String](last)
         val dirR = new Array[String](last)
         k = 0
         while (k < last) {
-          val lbl = prep.edgeLabel(path(k), path(k + 1))
-          undR(k) = lbl
-          dirR(k) = lbl + "-" + prep.edgeDir(path(k), path(k + 1))
+          lblR(k) = prep.edgeLabel(path(k), path(k + 1))
+          dirR(k) = prep.edgeDir(path(k), path(k + 1))
           k += 1
+        }
+        def directed(k: Int): Unit = { sink.part(lblR(k)); sink.part('-'); sink.part(dirR(k)) }
+        def full(k: Int): Unit = {
+          sink.part(bowR(k))
+          if (k < last) { sink.part(' '); directed(k) }
         }
         var n = 1
         while (n <= 4) {
-          val gu = name + "_undir_" + n + "g="
-          val gd = name + "_dir_" + n + "g="
           var s = 0
           while (s + n <= last) {
-            nb.setLength(0); nb.append(gu)
+            gram("_undir_", n)
             var j = 0
             while (j < n) {
-              if (j > 0) nb.append('~')
-              nb.append(undR(s + j))
+              if (j > 0) sink.part('~')
+              sink.part(lblR(s + j))
               j += 1
             }
-            add0(nb, 1.0)
-            nb.setLength(0); nb.append(gd)
+            sink.end(1.0)
+            gram("_dir_", n)
             j = 0
             while (j < n) {
-              if (j > 0) nb.append('~')
-              nb.append(dirR(s + j))
+              if (j > 0) sink.part('~')
+              directed(s + j)
               j += 1
             }
-            add0(nb, 1.0)
+            sink.end(1.0)
             s += 1
           }
           n += 1
         }
         // full n-grams: token + directed edge per node (n=1 over
         // source+middle, n>1 over all nodes)
-        val fullR = new Array[String](path.length)
         k = 0
-        while (k <= last) {
-          fullR(k) = if (k < last) bowR(k) + " " + dirR(k) else bowR(k)
-          k += 1
-        }
-        val f1 = name + "_full_1g="
-        k = 0
-        while (k < last) { add2(f1, fullR(k)); k += 1 }
+        while (k < last) { gram("_full_", 1); full(k); sink.end(1.0); k += 1 }
         n = 2
         while (n <= 4) {
-          val gn = name + "_full_" + n + "g="
           var s = 0
           while (s + n <= path.length) {
-            nb.setLength(0); nb.append(gn)
+            gram("_full_", n)
             var j = 0
             while (j < n) {
-              if (j > 0) nb.append('~')
-              nb.append(fullR(s + j))
+              if (j > 0) sink.part('~')
+              full(s + j)
               j += 1
             }
-            add0(nb, 1.0)
+            sink.end(1.0)
             s += 1
           }
           n += 1
@@ -649,10 +713,9 @@ object RelationScoring {
         add("pd_len", path.length.toDouble)
         val inner = path.drop(1).dropRight(1)
         inner.foreach { i =>
-          add(s"pd_tok=${masked(i)}")
-          add(s"pd_pos=${prep.pos(i)}")
-          if (prep.pos(i) == "VERB")
-            add(s"pd_verb=${Porter.stem(toks(i).word.toLowerCase)}")
+          add2("pd_tok=", masked(i))
+          add2("pd_pos=", prep.pos(i))
+          if (prep.pos(i) == "VERB") add2("pd_verb=", prep.stem(i))
         }
         pathFeatures("pd", path, withEdges = true)
       } else add("pd_unreachable")
@@ -666,38 +729,34 @@ object RelationScoring {
     // `from_<dep>` / `chain..-fw_<dep>` naming (`entityhead.py:264-281`).
     // the walk itself (pair-independent tree structure) is cached per
     // start token in SentencePrep and replayed here as a flat loop —
-    // per-visit work is a handful of two-part concats (the walk revisits
+    // per-visit work is a handful of part sequences (the walk revisits
     // O(fanout²) nodes on flat parses, so per-visit cost is the hot spot)
     def chainsFor(prefix: String, start: Int): Unit = {
       if (start < 0) return
-      val depFrom = Array.tabulate(4)(d => prefix + "dep_dist_" + d + "_from_")
-      val depTo = Array.tabulate(4)(d => prefix + "dep_dist_" + d + "_to_")
-      val chainBase = Array.tabulate(4)(d => prefix + "chain_dep_dist_" + d + "_")
-      val loBase = Array.tabulate(4)(d => prefix + "dist_" + d + "_")
+      def dist(kind: String, d: Int, tail: String): Unit = {
+        sink.part(prefix); sink.part(kind); sink.digits(d); sink.part(tail)
+      }
       val visits = prep.chainVisitsOf(start)
       var vi = 0
       while (vi < visits.length) {
         val v = visits(vi)
         if (v.fw) {
-          add2(depFrom(v.depth), v.label)
-          nb.setLength(0)
-          nb.append(chainBase(v.depth)).append(v.chain).append("-fw_").append(v.label)
-          add0(nb, 1.0)
+          dist("dep_dist_", v.depth, "_from_"); sink.part(v.label); sink.end(1.0)
+          dist("chain_dep_dist_", v.depth, "_"); sink.part(v.chain)
+          sink.part("-fw_"); sink.part(v.label); sink.end(1.0)
         } else {
-          add2(depTo(v.depth), v.label)
-          nb.setLength(0)
-          nb.append(chainBase(v.depth)).append(v.chain).append("-rv_").append(v.label)
-          add0(nb, 1.0)
+          dist("dep_dist_", v.depth, "_to_"); sink.part(v.label); sink.end(1.0)
+          dist("chain_dep_dist_", v.depth, "_"); sink.part(v.chain)
+          sink.part("-rv_"); sink.part(v.label); sink.end(1.0)
         }
-        val base = loBase(v.depth)
         val i = v.token
-        add3(base, "txt=", prep.lower(i))
-        add3(base, "pos=", prep.pos(i))
-        add3(base, "masked=", masked(i))
+        dist("dist_", v.depth, "_txt="); sink.part(prep.lower(i)); sink.end(1.0)
+        dist("dist_", v.depth, "_pos="); sink.part(prep.pos(i)); sink.end(1.0)
+        dist("dist_", v.depth, "_masked="); sink.part(masked(i)); sink.end(1.0)
         val ac = annClass(i)
         if (ac != null) {
-          add2(base, "ann_entity")
-          add3(base, "ann_type=", ac)
+          dist("dist_", v.depth, "_ann_entity"); sink.end(1.0)
+          dist("dist_", v.depth, "_ann_type="); sink.part(ac); sink.end(1.0)
         }
         vi += 1
       }

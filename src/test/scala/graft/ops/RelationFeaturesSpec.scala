@@ -185,4 +185,120 @@ class RelationFeaturesSpec extends SparkSpec {
     assert(pairs == Map("table|merge" -> 1L, "stream|merge" -> 1L,
       "table|scan" -> 1L))
   }
+
+  // ---- bit-identity goldens of the scoring kernel ---------------------
+
+  /** Fixture conversations for the goldens: same-sentence, cross-sentence
+    * and cross-turn pairs at `window = 1` (A, B) and a `class1 == class2`
+    * configuration (C). B carries symbol-shaped,
+    * numeric, hyphenated and negated text so every generator fires.
+    */
+  private val goldenGaz = Map("merge" -> "op", "scan" -> "op",
+    "table" -> "obj", "stream" -> "obj", "Mdv1p" -> "gene", "CYO1" -> "gene",
+    "Fis1" -> "gene", "glucose" -> "chem", "ATP" -> "chem")
+  private val goldenTagger: IndexedSeq[Tok] => Seq[(String, Int, Int)] =
+    toks => toks.flatMap(t => goldenGaz.get(t.word).map(c => (c, t.begin, t.end)))
+  private val goldenConvs: Seq[(String, KgPipeline.Config, Seq[Turn])] = Seq(
+    ("A", cfg, turns),
+    ("B", KgPipeline.Config("binds", "gene", "chem", window = 1), Seq(
+      turn(0, "The Mdv1p protein does not bind glucose in 2 mutant cells, " +
+        "but CYO1 strongly activates ATP-transport."),
+      turn(1, "Surprisingly, glucose and Mdv1p were detected together at " +
+        "37 degrees; CYO1 binds glucose."),
+      turn(2, "We could never show that ATP transport requires Mdv1p."))),
+    ("C", KgPipeline.Config("interacts", "gene", "gene", window = 1), Seq(
+      turn(0, "Mdv1p binds CYO1 and Mdv1p."),
+      turn(1, "CYO1 inhibits Fis1 directly."))))
+
+  /** Seeded dense model: every hashed index carries a distinct weight, so
+    * any change to a feature name, value or summation order moves the
+    * score's bits.
+    */
+  private lazy val denseModel = {
+    val rng = new scala.util.Random(20261017L)
+    RelationScoring.LinearModel(Array.fill(RelationScoring.Dims)(rng.nextGaussian()), 0.25)
+  }
+
+  /** Every candidate of the fixture conversations, no short-circuit, with
+    * its feature map and its `scoreEdge` result.
+    */
+  private def goldenCandidates: Seq[(String, KgPipeline.Candidate)] =
+    goldenConvs.flatMap { case (name, c, ts) =>
+      KgPipeline.candidateEdges(name, ts, c, goldenTagger, withFeatures = true,
+        scorer = Some(denseModel)).map { cand =>
+        val m1 = cand.m1; val m2 = cand.m2
+        (s"$name ${m1.text}@${m1.turn_idx}.${m1.sent_idx}.${m1.begin} " +
+          s"${m2.text}@${m2.turn_idx}.${m2.sent_idx}.${m2.begin}", cand)
+      }
+    }
+
+  /** SHA-256 (first 16 hex chars) of the sorted `name=value` list. */
+  private def featDigest(f: Map[String, Double]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    f.toSeq.sortBy(_._1).foreach { case (k, v) =>
+      md.update(s"$k=${java.lang.Double.doubleToRawLongBits(v)}\n".getBytes("UTF-8"))
+    }
+    md.digest().take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  /** (pair, raw bits of `scoreEdge`, [[featDigest]], feature count) per
+    * candidate, in enumeration order — captured before the streaming
+    * feature sink and the per-word memo replaced the builder-and-hash
+    * kernel, and unchanged by them.
+    */
+  private val goldens: Seq[(String, Long, String, Int)] = Seq(
+    ("A merge@0.0.0 table@0.0.6", 0x4033c36fbd97d15dL, "a11f62cfd3537e2e", 153),
+    ("A merge@0.0.0 stream@0.1.23", 0x4027b9bbaa27e48fL, "a00f085d02ca7235", 242),
+    ("A merge@0.1.17 table@0.0.6", 0x4026e0a4414af764L, "90f77cd511424a50", 230),
+    ("A merge@0.1.17 stream@0.1.23", 0x3fbb76b8c5429810L, "8adec12ecc53c745", 144),
+    ("A merge@0.0.0 table@1.0.5", 0x402a234bc1c3d2ffL, "c78e4a8621f7b948", 239),
+    ("A merge@0.1.17 table@1.0.5", 0x3ff55c9228b9c725L, "9b8835ac65ee07c4", 233),
+    ("A scan@1.0.0 table@1.0.5", 0x4029e69ba1a40d91L, "0bec0714f5a7b799", 151),
+    ("B Mdv1p@0.0.4 glucose@0.0.32", 0x404a370e2465b47cL, "bc4898a534bfecdc", 378),
+    ("B Mdv1p@0.0.4 ATP@0.0.87", 0x40502236ee888520L, "c8e1caffd0803e59", 522),
+    ("B CYO1@0.0.63 glucose@0.0.32", 0x4042de53f702f8b1L, "6bc634f4ea053d09", 410),
+    ("B CYO1@0.0.63 ATP@0.0.87", 0x4040d48a598aa7b3L, "72a15dbbca74873b", 299),
+    ("B Mdv1p@0.0.4 glucose@1.0.14", 0x40204db5d7ff0ca1L, "2355bf892ea9be44", 605),
+    ("B Mdv1p@0.0.4 glucose@1.0.81", 0x40373bd881a16323L, "dbdc884ad05a5bd9", 717),
+    ("B CYO1@0.0.63 glucose@1.0.14", 0x4012645edfa9e45bL, "0ba6677f3dd4194c", 457),
+    ("B CYO1@0.0.63 glucose@1.0.81", 0x40270eb56537411dL, "ef837bf9aab15edb", 562),
+    ("B Mdv1p@1.0.26 glucose@1.0.14", 0x4022ce064af851bfL, "c116014b82eb1a29", 290),
+    ("B Mdv1p@1.0.26 glucose@1.0.81", 0x4031247e82c3151dL, "51e11f221a53ed4a", 428),
+    ("B CYO1@1.0.70 glucose@1.0.14", 0x4032cd1ca949c90dL, "7d92361b5cf3b9fc", 452),
+    ("B CYO1@1.0.70 glucose@1.0.81", 0xc0128a8a1db06b67L, "cd1367f2d394f693", 256),
+    ("B Mdv1p@1.0.26 ATP@2.0.25", 0x4037b1284fc4c0e2L, "c9fe5106cd287294", 525),
+    ("B CYO1@1.0.70 ATP@2.0.25", 0x40310a488f005be8L, "a39f31e6e2002fa7", 448),
+    ("B Mdv1p@2.0.48 ATP@2.0.25", 0x4038b99ff72d594cL, "d59fc5f94d151afa", 261),
+    ("C Mdv1p@0.0.0 CYO1@0.0.12", 0xc03267925ca8bb02L, "dc4bb29c3e252151", 209),
+    ("C Mdv1p@0.0.0 Mdv1p@0.0.21", 0x401cd007ad95b4ebL, "5e9e235c231cb4db", 251),
+    ("C CYO1@0.0.12 Mdv1p@0.0.0", 0xc03456440a292231L, "e0c2ad312c467353", 209),
+    ("C CYO1@0.0.12 Mdv1p@0.0.21", 0x4015f44ecc33e3d8L, "332746030839fd4a", 197),
+    ("C Mdv1p@0.0.21 Mdv1p@0.0.0", 0x4032b8242aa37fe2L, "c74d2bf160a4310d", 251),
+    ("C Mdv1p@0.0.21 CYO1@0.0.12", 0x4029bc66024d6c03L, "046a7f447693c577", 197),
+    ("C Mdv1p@0.0.0 CYO1@1.0.0", 0x40297385bc310781L, "15d1ca87f56a0bc4", 286),
+    ("C Mdv1p@0.0.0 Fis1@1.0.14", 0x4039b9695ae75778L, "e2fbfaa41513ea41", 303),
+    ("C CYO1@0.0.12 CYO1@1.0.0", 0x40124b0eedc08259L, "c5d496ff3163dffc", 234),
+    ("C CYO1@0.0.12 Fis1@1.0.14", 0x4031c619f874631dL, "1297ae41103ed1d5", 300),
+    ("C Mdv1p@0.0.21 CYO1@1.0.0", 0x402be2e13c7ec6d5L, "a1c85ccb2b563e7e", 200),
+    ("C Mdv1p@0.0.21 Fis1@1.0.14", 0x4045547a6101343eL, "44e13c46119d2558", 274),
+    ("C CYO1@1.0.0 Fis1@1.0.14", 0x4029833d3f8f4191L, "2d4c4acf20a602a2", 179),
+    ("C Fis1@1.0.14 CYO1@1.0.0", 0x402969f0f7506c71L, "d71acc166c6ad55f", 179)
+  )
+
+  test("scoreEdge is bit-identical to the pinned goldens under a dense model") {
+    val got = goldenCandidates.map { case (label, c) =>
+      (label, java.lang.Double.doubleToRawLongBits(c.score), featDigest(c.feats),
+        c.feats.size)
+    }
+    assert(got.map(_._1) == goldens.map(_._1))
+    got.zip(goldens).foreach { case (g, want) => assert(g == want, g._1) }
+  }
+
+  test("training Map path and scoring fold agree on every golden pair") {
+    goldenCandidates.foreach { case (label, c) =>
+      val viaMap = denseModel.score(RelationScoring.hashFeats(c.feats))
+      assert(math.abs(viaMap - c.score) <= 1e-9 * math.max(1.0, math.abs(c.score)),
+        s"$label: map $viaMap vs fold ${c.score}")
+    }
+  }
 }

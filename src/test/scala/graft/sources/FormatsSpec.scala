@@ -25,21 +25,37 @@ class FormatsSpec extends SparkSpec {
 
   test("reference stub.pubtator parses: title+abstract docs, offset-valid anns") {
     import spark.implicits._
+    // hand-written stand-in for the reference's demo stub, in its
+    // title|abstract layout: an annotation-free doc, a doc annotated in
+    // both title and abstract, and a title-only doc
     val (docs, anns) = Formats.fromPubTator(spark,
-      "/root/reference/resources/corpora/demo/stub.pubtator")
+      getClass.getResource("/corpora/stub.pubtator").getPath)
     val d = docs.as[(String, String)].collect().toMap
-    assert(d.contains("darkunit123"))
+    assert(d.keySet == Set("darkunit123", "pmid4242", "pmid5151"))
     assert(d("darkunit123").startsWith("I like trains"))
-    // every annotation's span must match the document text (the shared
-    // title+' '+abstract coordinate space of the reference reader)
-    val bad = anns.as[(String, Int, Int, String, String)].collect().filter {
+    // title + ' ' + abstract is the shared coordinate space of the
+    // reference reader; a title-only doc is its title
+    assert(d("darkunit123") ==
+      "I like trains Trains run on rails, and I like to watch them pass.")
+    assert(d("pmid5151") == "BRCA1 and p53 interact")
+    // every annotation's span must match the document text
+    val all = anns.as[(String, Int, Int, String, String)].collect()
+    val bad = all.filter {
       case (id, b, e, t, _) =>
         !d.contains(id) || d(id).length < e || d(id).substring(b, e) != t
     }
     assert(bad.isEmpty, bad.take(3).mkString(", "))
-    // the demo stub carries no annotation rows — the parse must simply
-    // be empty, not fail
-    assert(anns.count() == 0)
+    // abstract spans sit past the title and its joining space
+    assert(all.toSet == Set(
+      ("pmid4242", 0, 5, "Mdv1p", "e_gene"), ("pmid4242", 12, 16, "Fis1", "e_gene"),
+      ("pmid4242", 44, 48, "CYO1", "e_gene"),
+      ("pmid4242", 64, 79, "plastid protein", "e_protein"),
+      ("pmid4242", 89, 93, "CYO1", "e_gene"), ("pmid4242", 124, 128, "Fis1", "e_gene"),
+      ("pmid4242", 138, 143, "Mdv1p", "e_gene"),
+      ("pmid5151", 0, 5, "BRCA1", "e_gene"), ("pmid5151", 10, 13, "p53", "e_gene")))
+    assert(all.length == 9)
+    // a doc without annotation rows parses to an empty set, not a failure
+    assert(anns.filter($"doc_id" === "darkunit123").count() == 0)
   }
 
   test("text-files reader: blank-line paragraphs become parts") {
