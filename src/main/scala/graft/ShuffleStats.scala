@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * `SparkEntry.queries(<name>)` on `<sfDir>` with a task-metrics listener
   * and prints total shuffle bytes written/read across all jobs the query
   * triggered. This is the evidence tool for plan-shape claims ("the
-  * banded self-join ships id rows, not shingle arrays") — `Explain`
+  * banded self-join ships id rows, not shingle arrays") — `PlanDump`
   * shows the shape, this shows the bytes.
   *
   * Usage: runMain graft.ShuffleStats <queryName> [sfDir]

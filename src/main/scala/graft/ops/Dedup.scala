@@ -145,17 +145,23 @@ object Dedup {
   private[graft] def docShingles(text: String, shingleN: Int): Array[Long] =
     Hashes.shingles(text.split("\\s+").toIndexedSeq, shingleN).toArray
 
-  /** One band's bucket key from a minhash signature: the band index
-    * salted and mix64-folded with that band's `rows` signature slots —
-    * THE band fold, shared by the batch band rows and
-    * `StreamingKg.minhashCandidatesStream` (their candidate-set equality
-    * holds by construction, and is also tested).
+  /** THE per-doc minhash band fold: a shingle set's `numPerm`-slot
+    * minhash signature cut into `bands` bucket keys, each the band index
+    * salted and mix64-folded with that band's `numPerm / bands` slots.
+    * [[bandedBuckets]], [[minhashLsh]] and
+    * `StreamingKg.minhashCandidatesStream` all call it, so their
+    * candidate sets are equal by construction (and also tested).
     */
-  private[graft] def bandBucket(sig: Array[Long], band: Int, rows: Int): Long = {
-    var h = Hashes.mix64(band.toLong + 0x9e3779b97f4a7c15L)
-    var k = 0
-    while (k < rows) { h = Hashes.mix64(h ^ sig(band * rows + k)); k += 1 }
-    h
+  private[graft] def bandBuckets(shingles: Array[Long], numPerm: Int,
+                                 bands: Int): Array[Long] = {
+    val sig = Hashes.minhash(shingles, numPerm)
+    val rows = numPerm / bands
+    Array.tabulate(bands) { band =>
+      var h = Hashes.mix64(band.toLong + 0x9e3779b97f4a7c15L)
+      var k = 0
+      while (k < rows) { h = Hashes.mix64(h ^ sig(band * rows + k)); k += 1 }
+      h
+    }
   }
 
   /** (doc_id, bucket) band rows — and NOTHING else. The bucket packs the
@@ -172,11 +178,9 @@ object Dedup {
     val spark = shingled.sparkSession
     import spark.implicits._
     require(numPerm % bands == 0)
-    val rows = numPerm / bands
     shingled.select(col("doc_id"), col("shingles")).as[(Long, Array[Long])]
       .flatMap { case (id, sh) =>
-        val sig = Hashes.minhash(sh, numPerm)
-        (0 until bands).iterator.map(b => (id, bandBucket(sig, b, rows)))
+        bandBuckets(sh, numPerm, bands).map(b => (id, b))
       }.toDF("doc_id", "bucket")
   }
 
@@ -200,8 +204,8 @@ object Dedup {
     import spark.implicits._
     require(numPerm % bands == 0)
     // r6: the minhash signature buckets are computed IN the persisted
-    // pass (same docShingles → Hashes.minhash → bandBucket fold the
-    // streaming side shares — only the caching point moved). Before,
+    // pass (the bandBuckets fold every minhash consumer shares — only
+    // the caching point moved). Before,
     // `banded` re-derived minhash from the cache on BOTH bucket-join
     // sides (the rename defeats ReusedExchange), and the four consumer
     // map stages (2 band sides + 2 verification sides) launch
@@ -210,12 +214,10 @@ object Dedup {
     // single-task stages all labelled the shingled scan. One row-count
     // action populates the cache BEFORE any consumer launches —
     // shingles + signatures are now computed exactly once per run.
-    val rows = numPerm / bands
     val shingled = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val sh = docShingles(text, shingleN)
-        val sig = Hashes.minhash(sh, numPerm)
-        (id, sh, Array.tabulate(bands)(b => bandBucket(sig, b, rows)))
+        (id, sh, bandBuckets(sh, numPerm, bands))
       }
       .toDF("doc_id", "shingles", "buckets")
       .persist()
@@ -254,20 +256,30 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, text) =>
-        val feats = text.split("\\s+").iterator.filter(_.nonEmpty)
-          .map(w => (Hashes.fnv1a64(w), 1))
-        (id, Hashes.simhash(feats))
-      }.toDF("doc_id", "simhash")
+      .map { case (id, text) => (id, simhashBlocks(text)._1) }
+      .toDF("doc_id", "simhash")
+  }
+
+  /** THE per-doc simhash fold: a text's 64-bit SimHash over its
+    * whitespace-split word features, and its four 16-bit block keys
+    * (block index in the high word, block value in the low). [[simhash]],
+    * [[simhashPairs]] and `StreamingKg.simhashPairsStream` all call it,
+    * so batch/stream blocking can never diverge.
+    */
+  private[graft] def simhashBlocks(text: String): (Long, Array[Long]) = {
+    val h = Hashes.simhash(text.split("\\s+").iterator.filter(_.nonEmpty)
+      .map(w => (Hashes.fnv1a64(w), 1)))
+    (h, Array.tabulate(4)(b => b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL)))
   }
 
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sh = simhash(docs).as[(Long, Long)]
-    val blocked = sh.flatMap { case (id, h) =>
-      (0 until 4).map(b => (b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL), id, h))
-    }.toDF("block", "doc_id", "simhash")
+    val blocked = docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .flatMap { case (id, text) =>
+        val (h, blocks) = simhashBlocks(text)
+        blocks.map(b => (b, id, h))
+      }.toDF("block", "doc_id", "simhash")
     val l = blocked.select(col("block"), col("doc_id").as("a"), col("simhash").as("ha"))
     val r = blocked.select(col("block"), col("doc_id").as("b"), col("simhash").as("hb"))
     l.join(r, Seq("block")).filter(col("a") < col("b"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model.{TripleRow, Turn}
@@ -43,11 +43,114 @@ object StreamingKg {
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
+  /** When a stateful operator's per-key state is evicted. One policy
+    * type for all four stateful operators ([[triplesStateful]],
+    * [[exactDedupStream]], [[simhashPairsStream]],
+    * [[minhashCandidatesStream]]); [[evictingGroups]] owns every timeout
+    * rule, so the operators differ only in their per-group bodies.
+    *
+    * Eviction semantics are the same everywhere: evicted state is
+    * simply gone — a key that re-appears afterwards starts fresh (a
+    * conversation re-extracts its keys, a text becomes its own
+    * representative again, a bucket pairs with nothing older).
+    */
+  sealed trait Eviction
+  object Eviction {
+    /** State lives for the life of the query (append-only). */
+    case object Never extends Eviction
+
+    /** Processing-time eviction: a key idle for `maxIdle` wall-clock time
+      * (a Spark duration string, e.g. "30 minutes") is dropped. With a
+      * processing-time timeout registered the engine schedules
+      * timeout-check batches forever, so `processAllAvailable()` never
+      * returns — poll the sink instead.
+      */
+    final case class Idle(maxIdle: String) extends Eviction
+
+    /** Event-time eviction — the horizon for REPLAYED or historical
+      * streams, where wall-clock idleness says nothing about event-time
+      * adjacency. The operator installs a watermark on the input's event
+      * time (`watermarkDelay` = the lateness the stream tolerates), and
+      * a key is evicted once the watermark passes its max event time
+      * plus `idleGapMs`, i.e. only when the stream PROVES nothing within
+      * the gap can still arrive.
+      *
+      * The max event time is state-carried — the max over EVERY arrival
+      * the key has seen, so a late-but-valid arrival cannot shrink the
+      * horizon — and the timeout is re-armed on every batch to
+      * max(max event time + idleGapMs, watermark + 1 ms) (Spark requires
+      * a strictly-future timeout). A NULL event time adds nothing to the
+      * horizon and the row is otherwise processed normally, as the batch
+      * operators do; a key that has seen only null event times is
+      * evicted as soon as the watermark moves. (`sessionizeStream`
+      * instead drops null-ts rows: a timeless event cannot be placed in
+      * a session.)
+      */
+    final case class EventTime(watermarkDelay: String = "10 minutes",
+                               idleGapMs: Long = 30L * 60 * 1000) extends Eviction
+  }
+
+  /** Per-key state that carries the max event time its key has seen —
+    * the [[Eviction.EventTime]] horizon. Only [[evictingGroups]] reads or
+    * writes it; under the other policies it stays 0.
+    */
+  sealed trait EventHorizon[S] {
+    def lastEventMs: Long
+    def withLastEventMs(ms: Long): S
+  }
+
+  /** `flatMapGroupsWithState` under an [[Eviction]] policy — the one place
+    * that knows about timeouts. `rows` is the input AFTER any fan-out:
+    * the watermark must sit directly under the grouping (a typed map
+    * between watermark and grouping would strip the event-time tag from
+    * the attribute). `tsCol` names the event-time column of `rows` and
+    * `ts` reads it from a row; both are used only under
+    * [[Eviction.EventTime]]. `body` sees each non-timed-out group's rows
+    * and state and must leave its emitted rows fully built.
+    */
+  private def evictingGroups[V, K: Encoder, S <: EventHorizon[S]: Encoder, U: Encoder](
+      rows: Dataset[V], eviction: Eviction, tsCol: String, ts: V => java.sql.Timestamp)(
+      key: V => K)(body: (K, Seq[V], GroupState[S]) => Iterator[U]): Dataset[U] = {
+    val (input, timeout) = eviction match {
+      case Eviction.Never => (rows, GroupStateTimeout.NoTimeout())
+      case Eviction.Idle(_) => (rows, GroupStateTimeout.ProcessingTimeTimeout())
+      case Eviction.EventTime(delay, _) =>
+        (rows.withWatermark(tsCol, delay), GroupStateTimeout.EventTimeTimeout())
+    }
+    input.groupByKey(key).flatMapGroupsWithState(OutputMode.Append(), timeout) {
+      (k: K, it: Iterator[V], state: GroupState[S]) =>
+        if (state.hasTimedOut) {
+          state.remove()
+          Iterator.empty
+        } else {
+          val seq = it.toSeq
+          // read before `body` replaces the state with a fresh value
+          val horizon = state.getOption.map(_.lastEventMs).getOrElse(0L)
+          val out = body(k, seq, state)
+          eviction match {
+            case Eviction.Never =>
+            case Eviction.Idle(maxIdle) => state.setTimeoutDuration(maxIdle)
+            case Eviction.EventTime(_, gapMs) =>
+              val lastEventMs = seq.iterator.map(ts).filter(_ ne null)
+                .map(_.getTime).foldLeft(horizon)(math.max)
+              state.getOption.foreach(s =>
+                state.update(s.withLastEventMs(lastEventMs)))
+              state.setTimeoutTimestamp(math.max(lastEventMs + gapMs,
+                state.getCurrentWatermarkMs() + 1))
+          }
+          out
+        }
+    }
+  }
+
   /** Per-conversation state for [[triplesStateful]]: the turns seen so
     * far (conversations are bounded — transcripts end) and the canonical
     * keys already emitted (cross-batch dedup).
     */
-  final case class ConvState(turns: Seq[Turn], emittedKeys: Set[String])
+  final case class ConvState(turns: Seq[Turn], emittedKeys: Set[String],
+                             lastEventMs: Long = 0L) extends EventHorizon[ConvState] {
+    def withLastEventMs(ms: Long): ConvState = copy(lastEventMs = ms)
+  }
 
   /** Stateful incremental extraction for conversations whose turns
     * arrive ACROSS micro-batches — `flatMapGroupsWithState` over
@@ -59,51 +162,42 @@ object StreamingKg {
     *  - each batch re-runs the pure per-conversation extraction over the
     *    accumulated turns and emits ONLY new keys (append-mode-safe,
     *    exactly-once per key under the streaming checkpoint),
-    *  - idle conversations are evicted by processing-time timeout, so
-    *    state is bounded by ACTIVE conversations × bounded turns (back the
-    *    state store with RocksDB at scale — a TESTED mode: one conf
-    *    line, `spark.sql.streaming.stateStore.providerClass =
+    *  - idle conversations are evicted under `eviction` (default: 30
+    *    minutes of processing-time idleness; [[Eviction.EventTime]] on
+    *    the turns' `ts` for replayed transcripts), so state is bounded by
+    *    ACTIVE conversations × bounded turns (back the state store with
+    *    RocksDB at scale — a TESTED mode: one conf line,
+    *    `spark.sql.streaming.stateStore.providerClass =
     *    ...state.RocksDBStateStoreProvider`, ships with Spark; output
     *    parity + provider-in-effect pinned in StreamingKgSpec).
     */
   def triplesStateful(turns: Dataset[Turn], cfg: KgPipeline.Config,
                       gaz: Map[String, String],
                       scorer: Option[RelationScoring.LinearModel] = None,
-                      maxIdle: String = "30 minutes",
-                      timeout: GroupStateTimeout =
-                        GroupStateTimeout.ProcessingTimeTimeout()): Dataset[TripleRow] = {
-    // EventTimeTimeout requires state.setTimeoutTimestamp + a watermark —
-    // semantics this idle-duration API does not model. Reject it up front
-    // instead of letting setTimeoutDuration throw mid-stream.
-    require(timeout != GroupStateTimeout.EventTimeTimeout(),
-      "triplesStateful models idle-duration eviction: use " +
-        "ProcessingTimeTimeout (default) or NoTimeout; for watermark-based " +
-        "eviction use triplesStatefulEventTime")
+                      eviction: Eviction = Eviction.Idle("30 minutes")): Dataset[TripleRow] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val bcGaz = spark.sparkContext.broadcast(gaz)
     val bcLin = spark.sparkContext.broadcast(scorer)
-    val useTimeout = timeout != GroupStateTimeout.NoTimeout()
-    turns.groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout) {
-        (convId: String, newTurns: Iterator[Turn], state: GroupState[ConvState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val fresh = mergeAndExtract(convId, newTurns, state, cfg,
-              bcGaz.value, bcLin.value)
-            if (useTimeout) state.setTimeoutDuration(maxIdle)
-            fresh
-          }
-      }
+    evictingGroups(turns, eviction, "ts", (t: Turn) => t.ts)(_.conv_id) {
+      (convId: String, newTurns: Seq[Turn], state: GroupState[ConvState]) =>
+        mergeAndExtract(convId, newTurns.iterator, state, cfg, bcGaz.value, bcLin.value)
+    }
   }
 
-  /** Shared per-group body of the stateful extractors: merge the arriving
+  /** [[triplesStateful]] under the default [[Eviction.EventTime]] policy
+    * (the name predates the policy parameter; existing callers use it).
+    */
+  def triplesStatefulEventTime(turns: Dataset[Turn], cfg: KgPipeline.Config,
+                               gaz: Map[String, String],
+                               scorer: Option[RelationScoring.LinearModel] = None)
+  : Dataset[TripleRow] =
+    triplesStateful(turns, cfg, gaz, scorer, Eviction.EventTime())
+
+  /** Per-group body of [[triplesStateful]]: merge the arriving
     * turns into the accumulated state (first write per turn_idx wins),
     * re-run the pure per-conversation extraction, emit only
-    * not-yet-emitted keys, and update the state. Timeout bookkeeping is
-    * the caller's (the two timeout disciplines differ).
+    * not-yet-emitted keys, and update the state.
     */
   private def mergeAndExtract(convId: String, newTurns: Iterator[Turn],
                               state: GroupState[ConvState],
@@ -126,60 +220,18 @@ object StreamingKg {
     fresh.iterator
   }
 
-  /** Event-time variant of [[triplesStateful]]: conversations are evicted
-    * when the WATERMARK passes their last turn's event time plus
-    * `idleGap` — the late-data discipline `setTimeoutDuration` cannot
-    * express (processing-time eviction races real late arrivals; an
-    * event-time timeout fires only once the watermark PROVES no turn
-    * older than the gap can still arrive). Requires an event-time
-    * watermark on `ts`, which this operator installs itself
-    * (`watermarkDelay` = how much event-time lateness the stream
-    * tolerates).
-    *
-    * The timeout timestamp is re-armed on every batch to
-    * max(last event time + idleGap, watermark + 1ms) — the +1 floor
-    * keeps the call legal when a conversation's events are already far
-    * behind the watermark (Spark requires a strictly-future timeout).
-    */
-  def triplesStatefulEventTime(turns: Dataset[Turn], cfg: KgPipeline.Config,
-                               gaz: Map[String, String],
-                               scorer: Option[RelationScoring.LinearModel] = None,
-                               watermarkDelay: String = "10 minutes",
-                               idleGapMs: Long = 30L * 60 * 1000): Dataset[TripleRow] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val bcGaz = spark.sparkContext.broadcast(gaz)
-    val bcLin = spark.sparkContext.broadcast(scorer)
-    turns.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (convId: String, newTurns: Iterator[Turn], state: GroupState[ConvState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val fresh = mergeAndExtract(convId, newTurns, state, cfg,
-              bcGaz.value, bcLin.value)
-            val lastEventMs = state.get.turns.iterator
-              .map(_.ts.getTime).foldLeft(0L)(math.max)
-            state.setTimeoutTimestamp(
-              math.max(lastEventMs + idleGapMs,
-                state.getCurrentWatermarkMs() + 1))
-            fresh
-          }
-      }
-  }
-
   /** State for [[exactDedupStream]]: the representative (first-seen
     * minimal) doc_id and its text for each content hash.
     */
   final case class DedupState(repId: Long, text: String,
-                              lastEventMs: Long = 0L)
+                              lastEventMs: Long = 0L) extends EventHorizon[DedupState] {
+    def withLastEventMs(ms: Long): DedupState = copy(lastEventMs = ms)
+  }
 
   /** Streaming EXACT dedup at ingest — the incremental counterpart of
-    * `Dedup.exact` for a landing-zone document stream: documents are
-    * keyed by a 64-bit content hash (fnv1a64 — the engine-owned hash,
+    * `Dedup.exact` for a landing-zone stream of (doc_id, text, event
+    * ts): documents are keyed by a 64-bit content hash (fnv1a64 — the
+    * engine-owned hash,
     * callable per-key in groupByKey; the batch operator uses Catalyst's
     * xxhash64 column — both are only BUCKETING, exactness comes from the
     * text comparison, so the choice is invisible in the output),
@@ -199,43 +251,29 @@ object StreamingKg {
     * ascending id order; across batches, arrival order wins). The parity
     * test feeds ascending ids, where the two coincide.
     *
-    * State is bounded by distinct content hashes. `maxIdle` (r4) bounds
-    * it further in TIME: a hash bucket idle longer than the duration is
-    * evicted (processing-time timeout, the same discipline as
-    * [[triplesStateful]]), so state tracks the RECENTLY-SEEN corpus —
-    * at scale back the store with RocksDB (tested mode — see
-    * [[triplesStateful]]) and set maxIdle to the dedup horizon. Eviction semantics: a text re-ingested AFTER its bucket
-    * was evicted starts a fresh group (it becomes its own representative
-    * again — pinned in StreamingKgSpec); None keeps the original
-    * append-only NoTimeout behavior.
+    * State is bounded by distinct content hashes; `eviction` bounds it
+    * further in time — the dedup horizon (`Never` by default, the
+    * append-only behavior; `Idle` for a live landing zone; `EventTime`
+    * for replayed corpora). At scale back the store with RocksDB
+    * (tested mode — see [[triplesStateful]]). A text re-ingested AFTER
+    * its bucket was evicted starts a fresh group: it becomes its own
+    * representative again (pinned in StreamingKgSpec). `ts` is read only
+    * under [[Eviction.EventTime]].
     */
-  def exactDedupStream(docs: Dataset[(Long, String)],
-                       maxIdle: Option[String] = None): Dataset[(Long, Long, Boolean)] = {
+  def exactDedupStream(docs: Dataset[(Long, String, java.sql.Timestamp)],
+                       eviction: Eviction = Eviction.Never)
+  : Dataset[(Long, Long, Boolean)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (maxIdle.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    docs.groupByKey { case (_, text) =>
-      // engine-owned stable hash (graft invariant: never JVM hashCode)
-      graft.nlp.Hashes.fnv1a64(text)
-    }.flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-      (_: Long, rows: Iterator[(Long, String)], state: GroupState[DedupState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = exactDedupGroup(rows.toSeq, state)
-          maxIdle.foreach(state.setTimeoutDuration)
-          out
-        }
+    // engine-owned stable hash (graft invariant: never JVM hashCode)
+    evictingGroups(docs, eviction, "_3", (r: (Long, String, java.sql.Timestamp)) => r._3)(
+      r => graft.nlp.Hashes.fnv1a64(r._2)) {
+      (_: Long, rows: Seq[(Long, String, java.sql.Timestamp)], state: GroupState[DedupState]) =>
+        exactDedupGroup(rows.map(r => (r._1, r._2)), state)
     }
   }
 
-  /** Shared per-group body of [[exactDedupStream]] and its event-time
-    * variant — dedup semantics only; timeout bookkeeping is the caller's
-    * (the two disciplines differ).
-    */
+  /** Per-group body of [[exactDedupStream]] — dedup semantics only. */
   private def exactDedupGroup(rowSeq: Seq[(Long, String)],
                               state: GroupState[DedupState])
   : Iterator[(Long, Long, Boolean)] = {
@@ -258,65 +296,20 @@ object StreamingKg {
     out.result().iterator
   }
 
-  /** Event-time variant of [[exactDedupStream]] for REPLAYED or
-    * historical corpora: the dedup horizon is measured in EVENT time —
-    * a hash bucket is evicted once the WATERMARK passes its last
-    * document's event time plus `idleGapMs`, i.e. only when the stream
-    * PROVES no document within the horizon can still arrive. A
-    * processing-time `maxIdle` would race real late arrivals on replay
-    * (wall-clock idle says nothing about event-time adjacency when a
-    * year of history replays in minutes) — same reasoning as
-    * [[triplesStatefulEventTime]], whose timeout re-arming discipline
-    * (max(last event + gap, watermark + 1 ms)) this shares. Eviction
-    * semantics match the PT variant: a text re-ingested after its
-    * bucket's eviction starts a fresh group (pinned in StreamingKgSpec).
-    */
-  def exactDedupStreamEventTime(docs: Dataset[(Long, String, java.sql.Timestamp)],
-                                watermarkDelay: String = "10 minutes",
-                                idleGapMs: Long = 30L * 60 * 1000)
-  : Dataset[(Long, Long, Boolean)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.toDF("doc_id", "text", "ts")
-      .withWatermark("ts", watermarkDelay)
-      .as[(Long, String, java.sql.Timestamp)]
-      .groupByKey { case (_, text, _) => graft.nlp.Hashes.fnv1a64(text) }
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, String, java.sql.Timestamp)],
-         state: GroupState[DedupState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val seq = rows.toSeq
-            // horizon = max event time EVER seen by this bucket (state-
-            // carried) — re-arming from the current batch alone would let
-            // a late-but-valid arrival SHRINK the horizon and evict early
-            val lastEventMs = math.max(
-              seq.iterator.map(_._3.getTime).foldLeft(0L)(math.max),
-              state.getOption.map(_.lastEventMs).getOrElse(0L))
-            val out = exactDedupGroup(seq.map(r => (r._1, r._2)), state)
-            state.getOption.foreach(s =>
-              state.update(s.copy(lastEventMs = lastEventMs)))
-            state.setTimeoutTimestamp(
-              math.max(lastEventMs + idleGapMs,
-                state.getCurrentWatermarkMs() + 1))
-            out
-          }
-      }
-  }
-
   /** State for [[simhashPairsStream]]: every (doc_id, simhash) seen so
     * far in one 16-bit block bucket.
     */
   final case class BlockState(entries: List[(Long, Long)],
-                              lastEventMs: Long = 0L)
+                              lastEventMs: Long = 0L) extends EventHorizon[BlockState] {
+    def withLastEventMs(ms: Long): BlockState = copy(lastEventMs = ms)
+  }
 
   /** Streaming NEAR-dup detection at ingest — the incremental form of
-    * `Dedup.simhashPairs`: each arriving document fans out to its four
-    * 16-bit SimHash blocks; per-(block-id, block-value) state keeps the
-    * (doc_id, simhash) of every document seen in that bucket, and the
+    * `Dedup.simhashPairs`: each arriving (doc_id, text, event ts) fans
+    * out to its four 16-bit SimHash blocks (`Dedup.simhashBlocks`, the
+    * batch operator's own per-doc fold); per-(block-id, block-value)
+    * state keeps the (doc_id, simhash) of every document seen in that
+    * bucket, and the
     * arrival emits (a, b, hamming) for each stored document within
     * `maxHamming`. The pigeonhole argument is the batch operator's: any
     * pair within hamming 3 of 64 bits shares at least one identical
@@ -328,11 +321,10 @@ object StreamingKg {
     * the batch operator is tested). Assumes unique doc_ids (the batch
     * operator's contract).
     *
-    * State grows with corpus size per bucket; two r4 bounds:
-    * `maxIdle` evicts buckets idle past the duration (processing-time
-    * timeout — the dedup horizon at scale; re-ingested docs after
-    * eviction re-emit their pairs), and `maxBucket` caps the entries a
-    * hot bucket STORES: arrivals beyond the cap still compare against
+    * State grows with corpus size per bucket; two bounds:
+    * `eviction` drops buckets past the dedup horizon (re-ingested docs
+    * after eviction re-emit their pairs), and `maxBucket` caps the
+    * entries a hot bucket STORES: arrivals beyond the cap still compare against
     * the stored entries but are not added, so a boilerplate bucket emits
     * O(cap) pairs per arrival instead of O(bucket) — with the cap the
     * result is an explicit candidate SUBSET on hot buckets, the same
@@ -347,37 +339,25 @@ object StreamingKg {
     * — identical to the batch operator's blocking, so batch/stream
     * parity still holds at any setting.
     */
-  def simhashPairsStream(docs: Dataset[(Long, String)],
+  def simhashPairsStream(docs: Dataset[(Long, String, java.sql.Timestamp)],
                          maxHamming: Int = 3,
-                         maxIdle: Option[String] = None,
+                         eviction: Eviction = Eviction.Never,
                          maxBucket: Int = Int.MaxValue): Dataset[(Long, Long, Int)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (maxIdle.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    docs.flatMap { case (id, text) =>
-      val feats = text.split("\\s+").iterator.filter(_.nonEmpty)
-        .map(w => (graft.nlp.Hashes.fnv1a64(w), 1))
-      val h = graft.nlp.Hashes.simhash(feats)
-      (0 until 4).map(b => (b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL), id, h))
-    }.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (_: Long, rows: Iterator[(Long, Long, Long)], state: GroupState[BlockState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = simhashGroup(rows.toSeq.map(r => (r._2, r._3)), state,
-              maxHamming, maxBucket)
-            maxIdle.foreach(state.setTimeoutDuration)
-            out
-          }
-      }
+    val blocked = docs.flatMap { case (id, text, ts) =>
+      val (h, blocks) = graft.ops.Dedup.simhashBlocks(text)
+      blocks.map(b => (b, id, h, ts))
+    }
+    evictingGroups(blocked, eviction, "_4",
+      (r: (Long, Long, Long, java.sql.Timestamp)) => r._4)(_._1) {
+      (_: Long, rows: Seq[(Long, Long, Long, java.sql.Timestamp)], state: GroupState[BlockState]) =>
+        simhashGroup(rows.map(r => (r._2, r._3)), state, maxHamming, maxBucket)
+    }
   }
 
-  /** Shared per-group body of [[simhashPairsStream]] and its event-time
-    * variant: `rowSeq` = (doc_id, simhash) arrivals for one block bucket.
+  /** Per-group body of [[simhashPairsStream]]: `rowSeq` = (doc_id,
+    * simhash) arrivals for one block bucket.
     */
   private def simhashGroup(rowSeq: Seq[(Long, Long)],
                            state: GroupState[BlockState],
@@ -401,70 +381,21 @@ object StreamingKg {
     out.result().iterator
   }
 
-  /** Event-time variant of [[simhashPairsStream]] — the dedup horizon in
-    * EVENT time for replayed corpora (see [[exactDedupStreamEventTime]]
-    * for the discipline rationale). Input rows carry the document's
-    * event timestamp; block buckets are evicted when the watermark
-    * passes their last arrival's event time plus `idleGapMs`.
-    */
-  def simhashPairsStreamEventTime(docs: Dataset[(Long, String, java.sql.Timestamp)],
-                                  maxHamming: Int = 3,
-                                  watermarkDelay: String = "10 minutes",
-                                  idleGapMs: Long = 30L * 60 * 1000,
-                                  maxBucket: Int = Int.MaxValue)
-  : Dataset[(Long, Long, Int)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.flatMap { case (id, text, ts) =>
-        val feats = text.split("\\s+").iterator.filter(_.nonEmpty)
-          .map(w => (graft.nlp.Hashes.fnv1a64(w), 1))
-        val h = graft.nlp.Hashes.simhash(feats)
-        (0 until 4).map(b =>
-          (b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL), id, h, ts))
-      }
-      // watermark AFTER the fan-out: the event-time tag must sit on an
-      // attribute that reaches flatMapGroupsWithState's child (a typed
-      // flatMap between them would strip it)
-      .toDF("bucket", "doc_id", "simhash", "ts")
-      .withWatermark("ts", watermarkDelay)
-      .as[(Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long, java.sql.Timestamp)],
-         state: GroupState[BlockState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val seq = rows.toSeq
-            // state-carried max event time — see exactDedupStreamEventTime
-            val lastEventMs = math.max(
-              seq.iterator.map(_._4.getTime).foldLeft(0L)(math.max),
-              state.getOption.map(_.lastEventMs).getOrElse(0L))
-            val out = simhashGroup(seq.map(r => (r._2, r._3)), state,
-              maxHamming, maxBucket)
-            state.getOption.foreach(s =>
-              state.update(s.copy(lastEventMs = lastEventMs)))
-            state.setTimeoutTimestamp(
-              math.max(lastEventMs + idleGapMs,
-                state.getCurrentWatermarkMs() + 1))
-            out
-          }
-      }
-  }
-
   /** State for [[minhashCandidatesStream]]: doc ids seen in one band
     * bucket — ids ONLY, the same payload-free contract as the batch
     * operator's band rows.
     */
   final case class BucketState(ids: List[Long], lastEventMs: Long = 0L)
+    extends EventHorizon[BucketState] {
+    def withLastEventMs(ms: Long): BucketState = copy(lastEventMs = ms)
+  }
 
   /** Streaming MinHash-LSH near-dup CANDIDATES at ingest — the
     * incremental form of the batch `Dedup.bandedBuckets` candidate
-    * generation: each arriving document fans out to its `bands` bucket
-    * keys (identical shingle/signature/bucket arithmetic to the batch
-    * operator, so the candidate sets are EQUAL — tested), per-bucket
+    * generation: each arriving (doc_id, text, event ts) fans out to its
+    * `bands` bucket keys through `Dedup.docShingles` +
+    * `Dedup.bandBuckets`, the batch operators' own per-doc fold (so the
+    * candidate sets are EQUAL by construction — and tested), per-bucket
     * state keeps doc ids only, and an arrival emits (a, b) for every
     * id already in the bucket. Like the batch operator, candidates are
     * a superset of the true near-dups: exact-Jaccard verification joins
@@ -477,50 +408,35 @@ object StreamingKg {
     *
     * Same operational caveats as [[simhashPairsStream]]: assumes unique
     * doc_ids (a re-ingested id would re-emit its pairs in a LATER batch,
-    * beyond per-batch dedup). The r4 bounds mirror simhash: `maxIdle`
-    * evicts idle buckets by processing-time timeout, `maxBucket` caps
-    * stored ids per bucket so a hot boilerplate bucket emits O(cap)
+    * beyond per-batch dedup). The bounds mirror simhash: `eviction`
+    * drops buckets past the dedup horizon, `maxBucket` caps stored ids
+    * per bucket so a hot boilerplate bucket emits O(cap)
     * candidates per arrival instead of O(bucket) — an explicit candidate
     * subset on hot buckets; exact-Jaccard verification downstream keeps
     * precision regardless. At scale back the store with RocksDB (tested
     * mode — see [[triplesStateful]]).
     */
-  def minhashCandidatesStream(docs: Dataset[(Long, String)],
+  def minhashCandidatesStream(docs: Dataset[(Long, String, java.sql.Timestamp)],
                               shingleN: Int = 3, numPerm: Int = 64,
                               bands: Int = 16,
-                              maxIdle: Option[String] = None,
+                              eviction: Eviction = Eviction.Never,
                               maxBucket: Int = Int.MaxValue): Dataset[(Long, Long)] = {
     require(numPerm % bands == 0)
-    val rows = numPerm / bands
     val spark = docs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (maxIdle.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    // shingle/signature/bucket arithmetic = Dedup.docShingles +
-    // Hashes.minhash + Dedup.bandBucket — the SAME functions the batch
-    // band rows use, so candidate-set equality holds by construction
-    docs.flatMap { case (id, text) =>
-      val sig = graft.nlp.Hashes.minhash(
-        graft.ops.Dedup.docShingles(text, shingleN), numPerm)
-      (0 until bands).iterator.map(b =>
-        (graft.ops.Dedup.bandBucket(sig, b, rows), id))
-    }.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (_: Long, rowsIt: Iterator[(Long, Long)], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = minhashGroup(rowsIt.toSeq.map(_._2), state, maxBucket)
-            maxIdle.foreach(state.setTimeoutDuration)
-            out
-          }
-      }
+    val banded = docs.flatMap { case (id, text, ts) =>
+      graft.ops.Dedup.bandBuckets(graft.ops.Dedup.docShingles(text, shingleN),
+        numPerm, bands).map(b => (b, id, ts))
+    }
+    evictingGroups(banded, eviction, "_3",
+      (r: (Long, Long, java.sql.Timestamp)) => r._3)(_._1) {
+      (_: Long, rows: Seq[(Long, Long, java.sql.Timestamp)], state: GroupState[BucketState]) =>
+        minhashGroup(rows.map(_._2), state, maxBucket)
+    }
   }
 
-  /** Shared per-group body of [[minhashCandidatesStream]] and its
-    * event-time variant: `idSeq` = doc ids arriving in one band bucket.
+  /** Per-group body of [[minhashCandidatesStream]]: `idSeq` = doc ids
+    * arriving in one band bucket.
     */
   private def minhashGroup(idSeq: Seq[Long], state: GroupState[BucketState],
                            maxBucket: Int): Iterator[(Long, Long)] = {
@@ -535,57 +451,6 @@ object StreamingKg {
     }
     state.update(BucketState(ids))
     out.result().iterator
-  }
-
-  /** Event-time variant of [[minhashCandidatesStream]] — the dedup
-    * horizon in EVENT time for replayed corpora (see
-    * [[exactDedupStreamEventTime]]): band buckets are evicted when the
-    * watermark passes their last arrival's event time plus `idleGapMs`.
-    */
-  def minhashCandidatesStreamEventTime(docs: Dataset[(Long, String, java.sql.Timestamp)],
-                                       shingleN: Int = 3, numPerm: Int = 64,
-                                       bands: Int = 16,
-                                       watermarkDelay: String = "10 minutes",
-                                       idleGapMs: Long = 30L * 60 * 1000,
-                                       maxBucket: Int = Int.MaxValue)
-  : Dataset[(Long, Long)] = {
-    require(numPerm % bands == 0)
-    val rows = numPerm / bands
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.flatMap { case (id, text, ts) =>
-        val sig = graft.nlp.Hashes.minhash(
-          graft.ops.Dedup.docShingles(text, shingleN), numPerm)
-        (0 until bands).iterator.map(b =>
-          (graft.ops.Dedup.bandBucket(sig, b, rows), id, ts))
-      }
-      // watermark AFTER the fan-out (see simhashPairsStreamEventTime)
-      .toDF("bucket", "doc_id", "ts")
-      .withWatermark("ts", watermarkDelay)
-      .as[(Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rowsIt: Iterator[(Long, Long, java.sql.Timestamp)],
-         state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val seq = rowsIt.toSeq
-            // state-carried max event time — see exactDedupStreamEventTime
-            val lastEventMs = math.max(
-              seq.iterator.map(_._3.getTime).foldLeft(0L)(math.max),
-              state.getOption.map(_.lastEventMs).getOrElse(0L))
-            val out = minhashGroup(seq.map(_._2), state, maxBucket)
-            state.getOption.foreach(s =>
-              state.update(s.copy(lastEventMs = lastEventMs)))
-            state.setTimeoutTimestamp(
-              math.max(lastEventMs + idleGapMs,
-                state.getCurrentWatermarkMs() + 1))
-            out
-          }
-      }
   }
 
   /** END-TO-END streaming MinHash dedup — the packaged form of the
@@ -758,8 +623,7 @@ object StreamingKg {
   /** State for [[sessionizeStream]]: the user's current session (start
     * micros — the session's stable identity) and the max event time
     * ever seen (the gap horizon, state-carried so a late-but-valid
-    * arrival cannot shrink it — the [[exactDedupStreamEventTime]]
-    * discipline).
+    * arrival cannot shrink it — the [[Eviction.EventTime]] discipline).
     */
   final case class SessState(lastUs: Long, startUs: Long)
 

@@ -3,9 +3,31 @@ package graft.streaming
 import graft.SparkSpec
 import graft.model.Turn
 import graft.ops.{KgPipeline, Transcripts}
+import graft.streaming.StreamingKg.Eviction
 import java.nio.file.Files
+import org.apache.spark.sql.Dataset
 
 class StreamingKgSpec extends SparkSpec {
+
+  /** The dedup streams read (doc_id, text, ts); `ts` matters only under
+    * `Eviction.EventTime`, so the other policies' specs feed null.
+    */
+  private def untimed(docs: Dataset[(Long, String)])
+  : Dataset[(Long, String, java.sql.Timestamp)] = {
+    import spark.implicits._
+    docs.map { case (id, text) => (id, text, null: java.sql.Timestamp) }
+  }
+
+  /** Poll a memory sink until it holds `n` rows: a query with a
+    * processing-time timeout never goes quiescent, so
+    * `processAllAvailable()` would block forever on it.
+    */
+  private def awaitRows(table: String, n: Long): Unit = {
+    val deadline = System.currentTimeMillis() + 60000
+    while (spark.table(table).count() < n &&
+      System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(spark.table(table).count() >= n, s"timed out waiting for $n rows")
+  }
 
   private val gaz = Map(
     "svc_auth" -> "e_svc", "svc_billing" -> "e_svc", "svc_search" -> "e_svc",
@@ -51,10 +73,10 @@ class StreamingKgSpec extends SparkSpec {
     val cfg = KgPipeline.Config("r", "op", "obj", window = 1, tokenizer = "generic")
     val g = Map("merge" -> "op", "table" -> "obj")
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Turn]
-    // NoTimeout in the test: processing-time timeouts keep the query
+    // Never in the test: processing-time timeouts keep the query
     // running empty timeout-check batches, which drags test wall time
     val out = StreamingKg.triplesStateful(source.toDS(), cfg, g,
-      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())
+      eviction = Eviction.Never)
     val q = out.writeStream.format("memory").queryName("stateful_triples")
       .outputMode("append").start()
     def turn(c: String, i: Int, text: String) =
@@ -85,7 +107,7 @@ class StreamingKgSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.exactDedupStream(source.toDS())
+    val q = StreamingKg.exactDedupStream(untimed(source.toDS()))
       .toDF("doc_id", "rep_id", "is_dup")
       .writeStream.format("memory").queryName("stream_dedup")
       .outputMode("append").start()
@@ -119,17 +141,33 @@ class StreamingKgSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("triplesStateful rejects EventTimeTimeout up front") {
+  test("triplesStateful under `Eviction.Idle` evicts an idle conversation; re-arrival re-extracts") {
     import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val cfg = KgPipeline.Config("r", "op", "obj", window = 1, tokenizer = "generic")
-    // an event-time timeout needs setTimeoutTimestamp + watermark
-    // semantics this API does not model — fail at call time, not
-    // mid-stream inside the state function
-    val e = intercept[IllegalArgumentException] {
-      StreamingKg.triplesStateful(Seq.empty[Turn].toDS(), cfg, Map.empty,
-        timeout = org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout())
-    }
-    assert(e.getMessage.contains("ProcessingTimeTimeout"))
+    val g = Map("merge" -> "op", "table" -> "obj")
+    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Turn]
+    // 1 ms idle: any later batch finds the conversation expired
+    val q = StreamingKg.triplesStateful(source.toDS(), cfg, g,
+        eviction = Eviction.Idle("1 millisecond"))
+      .writeStream.format("memory").queryName("idle_triples")
+      .outputMode("append").start()
+    def turn(i: Int, text: String) =
+      Turn("cA", i, "user", text, None, new java.sql.Timestamp(1735689600000L + i))
+    try {
+      source.addData(turn(0, "please merge it"), turn(1, "into the table"))
+      awaitRows("idle_triples", 1)
+      Thread.sleep(200) // idle past the timeout; eviction fires on a later batch
+      // the same turns again: with the conversation's state still held
+      // they would be deduped (same turn_idx, key already emitted);
+      // evicted, they re-open the conversation and re-extract the key
+      source.addData(turn(0, "please merge it"), turn(1, "into the table"))
+      awaitRows("idle_triples", 2)
+      val rows = spark.table("idle_triples")
+        .select("conv_id", "key").as[(String, String)].collect()
+      assert(rows.length == 2 && rows.map(_._2).distinct.length == 1,
+        s"conversation state must have been evicted: ${rows.toSeq}")
+    } finally q.stop()
   }
 
   test("event-time stateful: watermark-based eviction drops state, late re-arrival re-extracts") {
@@ -140,8 +178,8 @@ class StreamingKgSpec extends SparkSpec {
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Turn]
     // 1-minute lateness tolerance, 1-minute idle gap: a conversation is
     // evicted once the watermark proves nothing within its gap can arrive
-    val out = StreamingKg.triplesStatefulEventTime(source.toDS(), cfg, g,
-      watermarkDelay = "1 minute", idleGapMs = 60000L)
+    val out = StreamingKg.triplesStateful(source.toDS(), cfg, g,
+      eviction = Eviction.EventTime("1 minute", 60000L))
     val q = out.writeStream.format("memory").queryName("et_triples")
       .outputMode("append").start()
     val base = 1735689600000L
@@ -185,7 +223,7 @@ class StreamingKgSpec extends SparkSpec {
     val d4 = (0 until 40).map(i => s"other$i").mkString(" ") // unrelated
     val corpus = Seq((1L, d1), (2L, d4), (3L, d2), (4L, d3))
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.simhashPairsStream(source.toDS(), maxHamming = 16)
+    val q = StreamingKg.simhashPairsStream(untimed(source.toDS()), maxHamming = 16)
       .toDF("a", "b", "hamming")
       .writeStream.format("memory").queryName("stream_simhash")
       .outputMode("append").start()
@@ -230,7 +268,7 @@ class StreamingKgSpec extends SparkSpec {
     assert(batchCands.contains((1L, 4L)) && batchCands.contains((1L, 2L)))
     // streamed across two batches
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.minhashCandidatesStream(source.toDS())
+    val q = StreamingKg.minhashCandidatesStream(untimed(source.toDS()))
       .toDF("a", "b")
       .writeStream.format("memory").queryName("stream_minhash")
       .outputMode("append").start()
@@ -254,25 +292,20 @@ class StreamingKgSpec extends SparkSpec {
     // processing-time timeout registered, the engine ALWAYS schedules
     // another timeout-check batch, so processAllAvailable() never sees a
     // quiescent stream and would block forever — poll the sink instead.
-    val q = StreamingKg.exactDedupStream(source.toDS(), maxIdle = Some("1 millisecond"))
+    val q = StreamingKg.exactDedupStream(untimed(source.toDS()),
+        eviction = Eviction.Idle("1 millisecond"))
       .toDF("doc_id", "rep_id", "is_dup")
       .writeStream.format("memory").queryName("evict_dedup")
       .outputMode("append").start()
-    def awaitRows(n: Long): Unit = {
-      val deadline = System.currentTimeMillis() + 60000
-      while (spark.table("evict_dedup").count() < n &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(spark.table("evict_dedup").count() >= n, s"timed out waiting for $n rows")
-    }
     try {
       source.addData((1L, "same text"), (2L, "same text"))
-      awaitRows(2)
+      awaitRows("evict_dedup", 2)
       assert(spark.table("evict_dedup").as[(Long, Long, Boolean)].collect().toSet ==
         Set((1L, 1L, false), (2L, 1L, true)))
       Thread.sleep(200) // idle past the timeout; eviction fires on a later batch
       // the SAME text re-ingested after eviction: fresh group, own rep
       source.addData((9L, "same text"))
-      awaitRows(3)
+      awaitRows("evict_dedup", 3)
       val rows = spark.table("evict_dedup").as[(Long, Long, Boolean)].collect().toSet
       assert(rows.contains((9L, 9L, false)), s"state must have been evicted: $rows")
     } finally q.stop()
@@ -293,7 +326,7 @@ class StreamingKgSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      val q = StreamingKg.exactDedupStream(source.toDS())
+      val q = StreamingKg.exactDedupStream(untimed(source.toDS()))
         .toDF("doc_id", "rep_id", "is_dup")
         .writeStream.format("memory").queryName("rocks_dedup")
         .outputMode("append").start()
@@ -330,7 +363,7 @@ class StreamingKgSpec extends SparkSpec {
     val text = (0 until 30).map(i => s"boiler$i").mkString(" ")
     val docs = (1L to 40L).map(id => (id, text))
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.minhashCandidatesStream(source.toDS(), maxBucket = 4)
+    val q = StreamingKg.minhashCandidatesStream(untimed(source.toDS()), maxBucket = 4)
       .toDF("a", "b")
       .writeStream.format("memory").queryName("capped_minhash")
       .outputMode("append").start()
@@ -351,7 +384,8 @@ class StreamingKgSpec extends SparkSpec {
     val text = (0 until 30).map(i => s"tok$i").mkString(" ")
     val docs = (1L to 30L).map(id => (id, text))
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.simhashPairsStream(source.toDS(), maxHamming = 3, maxBucket = 5)
+    val q = StreamingKg.simhashPairsStream(untimed(source.toDS()), maxHamming = 3,
+      maxBucket = 5)
       .toDF("a", "b", "hamming")
       .writeStream.format("memory").queryName("capped_simhash")
       .outputMode("append").start()
@@ -432,8 +466,8 @@ class StreamingKgSpec extends SparkSpec {
     def ts(ms: Long) = new java.sql.Timestamp(ms)
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingKg.exactDedupStreamEventTime(source.toDS(),
-        watermarkDelay = "1 minute", idleGapMs = 60000L)
+    val q = StreamingKg.exactDedupStream(source.toDS(),
+        eviction = Eviction.EventTime("1 minute", 60000L))
       .toDF("doc_id", "rep_id", "is_dup")
       .writeStream.format("memory").queryName("et_dedup")
       .outputMode("append").start()
@@ -469,8 +503,8 @@ class StreamingKgSpec extends SparkSpec {
     def ts(sec: Long) = new java.sql.Timestamp(base + sec * 1000)
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingKg.exactDedupStreamEventTime(source.toDS(),
-        watermarkDelay = "10 minutes", idleGapMs = 60000L)
+    val q = StreamingKg.exactDedupStream(source.toDS(),
+        eviction = Eviction.EventTime("10 minutes", 60000L))
       .toDF("doc_id", "rep_id", "is_dup")
       .writeStream.format("memory").queryName("et_horizon")
       .outputMode("append").start()
@@ -518,8 +552,8 @@ class StreamingKgSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingKg.minhashCandidatesStreamEventTime(source.toDS(),
-        watermarkDelay = "1 minute", idleGapMs = 60000L)
+    val q = StreamingKg.minhashCandidatesStream(source.toDS(),
+        eviction = Eviction.EventTime("1 minute", 60000L))
       .toDF("a", "b")
       .writeStream.format("memory").queryName("et_minhash")
       .outputMode("append").start()
@@ -555,8 +589,8 @@ class StreamingKgSpec extends SparkSpec {
     val text = (0 until 40).map(i => s"t$i").mkString(" ")
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingKg.simhashPairsStreamEventTime(source.toDS(),
-        watermarkDelay = "1 minute", idleGapMs = 60000L)
+    val q = StreamingKg.simhashPairsStream(source.toDS(),
+        eviction = Eviction.EventTime("1 minute", 60000L))
       .toDF("a", "b", "hamming")
       .writeStream.format("memory").queryName("et_simhash")
       .outputMode("append").start()
@@ -576,6 +610,99 @@ class StreamingKgSpec extends SparkSpec {
       assert(after == Set((1L, 2L)),
         s"evicted buckets must not pair with doc 9: $after")
     } finally q.stop()
+  }
+
+  test("EventTime eviction: a null event time adds nothing to the horizon, all four operators") {
+    // a null ts must neither crash the query nor drop its row: the row is
+    // processed like any other (batch parity) and only the eviction
+    // horizon ignores it
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val base = 1735689600000L
+    def ts(ms: Long) = new java.sql.Timestamp(base + ms)
+    val noTs: java.sql.Timestamp = null
+    val et = Eviction.EventTime("1 minute", 60000L)
+    // one micro-batch per `batches` element
+    def run[T](out: Dataset[T], name: String)(batches: (() => Unit)*): Unit = {
+      val q = out.writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try {
+        batches.foreach { add => add(); q.processAllAvailable() }
+        assert(q.isActive && q.exception.isEmpty, s"$name: query died")
+      } finally q.stop()
+    }
+
+    // triples: the null-ts turn completes cA's pair; cB is untouched
+    val cfg = KgPipeline.Config("r", "op", "obj", window = 1, tokenizer = "generic")
+    val g = Map("merge" -> "op", "table" -> "obj")
+    val turns = Seq(
+      Turn("cA", 0, "user", "please merge it", None, ts(0)),
+      Turn("cA", 1, "user", "into the table", None, noTs),
+      Turn("cB", 0, "user", "merge table now", None, ts(1000)))
+    val turnSrc = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Turn]
+    run(StreamingKg.triplesStateful(turnSrc.toDS(), cfg, g, eviction = et), "null_ts_triples")(
+      () => turnSrc.addData(turns: _*))
+    val triples = spark.table("null_ts_triples")
+      .select("conv_id", "key").as[(String, String)].collect().toSet
+    val batchTriples = KgPipeline.triples(turns.toDS(), cfg, None, g, None)
+      .select("conv_id", "key").as[(String, String)].collect().toSet
+    assert(triples == batchTriples && triples.map(_._1) == Set("cA", "cB"))
+
+    // exact dedup: doc 2 (null ts) is still a duplicate of doc 1
+    val docSrc = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, java.sql.Timestamp)]
+    run(StreamingKg.exactDedupStream(docSrc.toDS(), eviction = et)
+        .toDF("doc_id", "rep_id", "is_dup"), "null_ts_dedup")(
+      () => docSrc.addData((1L, "same", ts(0)), (2L, "same", noTs),
+        (3L, "other", ts(1000)), (4L, "timeless", noTs)))
+    assert(spark.table("null_ts_dedup").as[(Long, Long, Boolean)].collect().toSet ==
+      Set((1L, 1L, false), (2L, 1L, true), (3L, 3L, false), (4L, 4L, false)))
+    // the horizon: "timeless" has none, so the first watermark move
+    // evicts it; "same" keeps doc 1's (0 s + 60 s gap), not a later one
+    val horizonSrc = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, java.sql.Timestamp)]
+    run(StreamingKg.exactDedupStream(horizonSrc.toDS(), eviction = et)
+        .toDF("doc_id", "rep_id", "is_dup"), "null_ts_horizon")(
+      () => horizonSrc.addData((1L, "same", ts(0)), (2L, "same", noTs),
+        (4L, "timeless", noTs)),
+      () => horizonSrc.addData((10L, "noise", ts(90000))), // watermark -> 30 s
+      () => horizonSrc.addData((5L, "timeless", noTs), (6L, "same", noTs)))
+    assert(spark.table("null_ts_horizon").as[(Long, Long, Boolean)].collect().toSet ==
+      Set((1L, 1L, false), (2L, 1L, true), (4L, 4L, false), (10L, 10L, false),
+        (5L, 5L, false), (6L, 1L, true)))
+
+    // simhash pairs: the null-ts exact dup still pairs
+    val text = (0 until 40).map(i => s"t$i").mkString(" ")
+    val shSrc = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, java.sql.Timestamp)]
+    run(StreamingKg.simhashPairsStream(shSrc.toDS(), eviction = et)
+        .toDF("a", "b", "hamming"), "null_ts_simhash")(
+      () => shSrc.addData((1L, text, ts(0)), (2L, text, noTs),
+        (3L, (0 until 40).map(i => s"u$i").mkString(" "), ts(1000))))
+    assert(spark.table("null_ts_simhash").select("a", "b").distinct()
+      .as[(Long, Long)].collect().toSet == Set((1L, 2L)))
+
+    // minhash candidates: equal to the batch band-row candidates
+    val words = (0 until 60).map(i => s"w$i")
+    val corpus = Seq((1L, words.mkString(" ")),
+      (2L, words.updated(7, "CHANGED").mkString(" ")),
+      (3L, (0 until 60).map(i => s"z$i").mkString(" ")))
+    val banded = graft.ops.Dedup.bandedBuckets(
+      corpus.map { case (id, t) => (id, graft.ops.Dedup.docShingles(t, 3)) }
+        .toDF("doc_id", "shingles"), numPerm = 64, bands = 16)
+    val batchCands = banded
+      .join(banded.select($"doc_id".as("b"), $"bucket"), Seq("bucket"))
+      .filter($"doc_id" < $"b")
+      .select($"doc_id".as("a"), $"b").distinct()
+      .as[(Long, Long)].collect().toSet
+    assert(batchCands.contains((1L, 2L)))
+    val mhSrc = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, java.sql.Timestamp)]
+    run(StreamingKg.minhashCandidatesStream(mhSrc.toDS(), eviction = et)
+        .toDF("a", "b"), "null_ts_minhash")(
+      () => mhSrc.addData((1L, corpus(0)._2, ts(0)), (2L, corpus(1)._2, noTs),
+        (3L, corpus(2)._2, ts(1000))))
+    assert(spark.table("null_ts_minhash").as[(Long, Long)].collect().toSet == batchCands)
   }
 
   test("minhashDedupStream: part-partitioned stores, a batch reads only its own parts") {
